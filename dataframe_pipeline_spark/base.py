@@ -1,19 +1,23 @@
 """Base classes and helpers for dataframe_pipeline_spark operators.
 
-The reference framework (IBM/dataframe-pipeline, see
-/root/reference/dfpipeline/DFPBase.py:23-53) defines a scikit-learn style
-``fit`` / ``transform`` / ``fit_transform`` contract over a single pandas
-DataFrame that every transformer mutates in place.  Here the same contract
-is re-expressed over immutable PySpark DataFrames: ``transform`` returns a
-*new* DataFrame built from declarative Column expressions so Catalyst can
-optimize the whole pipeline as one logical plan (column pruning, predicate
-pushdown, constant folding come for free).
+The reference framework (IBM/dataframe-pipeline, DFPBase.py:23-53)
+defines a scikit-learn style ``fit`` / ``transform`` / ``fit_transform``
+contract over a single pandas DataFrame that every transformer mutates
+in place.  Here the same contract is re-expressed over immutable PySpark
+DataFrames: ``transform`` returns a *new* DataFrame built from
+declarative Column expressions so Catalyst can optimize the whole
+pipeline as one logical plan (column pruning, predicate pushdown,
+constant folding come for free).
 
-Fitted state is kept either as small driver-side literals (scalars) or as
-*lookup DataFrames* that are joined back at transform time.  At 100 TB
-scale a fitted frequency/label map can be far too large for a literal
-``F.create_map``; a join (broadcast when small, shuffle otherwise — AQE
-picks at runtime) is the scale-safe representation.
+Fitted state is kept either as small driver-side literals (scalars) or
+as one :class:`FittedLookup` per dictionary: a key -> value(s) lookup
+DataFrame plus its fitted entry count.  At 100 TB scale a fitted
+frequency/label map can be far too large for a literal ``F.create_map``,
+so the batch path joins the lookup back (broadcast-hinted only when fit
+knows it is small; AQE picks otherwise).  The same object compiles
+itself once into literal maps for the online path (serving.py), so
+every dictionary encoder shares one join-back, one serving compiler and
+one broadcast bound.
 """
 
 from __future__ import annotations
@@ -24,13 +28,6 @@ from pyspark.sql import types as T
 
 #: Sentinel meaning "all columns" (reference: DFPBase.py:25 ``_PARM_ALL``).
 PARM_ALL = "__ALL"
-
-#: Attribute the serving tier (serving.py) caches compiled literal maps
-#: under.  Declared here so (a) ``fit`` can invalidate it without a
-#: circular import and (b) persistence can strip it (the cached values
-#: are pyspark Columns — py4j handles, not picklable and stale across
-#: sessions anyway).
-SERVING_CACHE_ATTR = "_dfp_serving_literals"
 
 
 class SparkDFPBase:
@@ -53,24 +50,6 @@ class SparkDFPBase:
     #: across any step that has not been audited.
     ROW_PRESERVING = False
 
-    def __init_subclass__(cls, **kwargs):
-        """Wrap each subclass's ``fit`` so refitting invalidates any
-        compiled serving-literal cache: without this, ``fit`` rebuilds
-        the lookup state but ``serving_transform`` keeps scoring with
-        the OLD literal maps — silent batch/serving divergence."""
-        super().__init_subclass__(**kwargs)
-        fit = cls.__dict__.get("fit")
-        if fit is not None and not getattr(fit, "_dfp_invalidates", False):
-            import functools
-
-            @functools.wraps(fit)
-            def fit_and_invalidate(self, *args, **kw):
-                self.__dict__.pop(SERVING_CACHE_ATTR, None)
-                return fit(self, *args, **kw)
-
-            fit_and_invalidate._dfp_invalidates = True
-            cls.fit = fit_and_invalidate
-
     @classmethod
     def replace_PARM_ALL(cls, df: DataFrame, tgt):
         if isinstance(tgt, str) and tgt == PARM_ALL:
@@ -86,6 +65,132 @@ class SparkDFPBase:
 
     def fit_transform(self, df: DataFrame, **params) -> DataFrame:
         return self.fit(df, **params).transform(df)
+
+
+# ---------------------------------------------------------------------------
+# Fitted lookups: the dictionary state of the encoders
+# ---------------------------------------------------------------------------
+
+#: Fitted lookups with at most this many entries get a broadcast hint on
+#: their batch join-back (~20 B/entry, about Spark's default
+#: autoBroadcastJoinThreshold).  Larger lookups, and those whose size fit
+#: does not know, get a plain join and AQE picks the strategy from
+#: runtime sizes: a high-cardinality dictionary must never be forced into
+#: executor memory.
+LOOKUP_BROADCAST_MAX_ROWS = 500_000
+
+#: Fitted lookups with at most this many entries are inlined as literal
+#: maps on the serving path; larger ones keep the batch join (a
+#: >100k-literal expression would bloat analysis time past the job cost
+#: it saves).
+SERVING_MAX_ROWS = 100_000
+
+
+def _cast_target(dtype: T.DataType):
+    """An atomic type as its DDL string: ``Column.cast`` sends a string
+    in one py4j call but a DataType in five, on the serving hot path."""
+    return dtype.simpleString() if isinstance(dtype, T.AtomicType) else dtype
+
+
+def _with_columns(df: DataFrame, cols: dict) -> DataFrame:
+    """``withColumns``, as one ``withColumn`` call for a single column
+    (it skips converting two lists to JVM seqs, ~8 py4j calls)."""
+    if len(cols) == 1:
+        ((name, col),) = cols.items()
+        return df.withColumn(name, col)
+    return df.withColumns(cols)
+
+
+def _literal_map(pairs):
+    """map<k,v> literal from python pairs; None when empty (create_map()
+    with no args has an untyped map type)."""
+    args = []
+    for k, v in pairs:
+        args += [F.lit(k), F.lit(v)]
+    return F.create_map(*args) if args else None
+
+
+class FittedLookup:
+    """One fitted key -> value(s) dictionary: ``frame`` holds the key
+    column ``key`` and one or more value columns, ``n`` is the fitted
+    entry count (None when fit does not know it; no job is spent to
+    find out).
+
+    :meth:`apply` is the only way the dictionary reaches a plan: a left
+    join on the caller's key for batch, or literal maps compiled from
+    one collect for serving.  A refit builds a new object, so the
+    compiled maps can never go stale; persistence writes ``frame`` as
+    parquet and drops the maps (py4j Column handles), which the first
+    serve after a load rebuilds.
+    """
+
+    #: persistence decomposes the object field by field (see
+    #: persistence._NestedObj) instead of pickling its DataFrame
+    _dfp_partition_hints: dict = {}
+    _dfp_transient = ("_maps",)
+
+    def __init__(self, frame: DataFrame, key: str, n: int | None = None):
+        self.frame = frame
+        self.key = key
+        self.n = n
+        self._maps = None
+
+    def apply(self, df: DataFrame, key: Column, outputs: dict,
+              default: Column | None = None,
+              serving: bool = False) -> DataFrame:
+        """Write ``outputs`` ({output column: value column}) onto ``df``:
+        each output is the value looked up by ``key``, else ``default``
+        (NULL when None), cast to the value column's fitted type.
+
+        Batch: left join on ``key``, broadcast-hinted only when the
+        count is known and at most ``LOOKUP_BROADCAST_MAX_ROWS``.
+        Serving: ``element_at`` on the literal maps, so a plan over a
+        local input folds to a LocalRelation; a lookup over
+        ``SERVING_MAX_ROWS`` falls back to the batch join.  The cast is
+        a no-op on the batch path and keeps serving types equal to it
+        (python literals narrow, e.g. long -> int)."""
+        def out(looked, cast_to):
+            if default is not None:
+                looked = F.coalesce(looked, default)
+            return looked.cast(cast_to)
+
+        maps = self._literal_maps() if serving else None
+        if maps:
+            return _with_columns(df, {
+                o: out(F.element_at(maps[v][0], key)
+                       if maps[v][0] is not None else F.lit(None),
+                       maps[v][1])
+                for o, v in outputs.items()})
+        lk = self.frame
+        if self.n is not None and self.n <= LOOKUP_BROADCAST_MAX_ROWS:
+            lk = F.broadcast(lk)
+        types = {f.name: _cast_target(f.dataType)
+                 for f in self.frame.schema.fields}
+        joined = df.join(lk, on=key == lk[self.key], how="left")
+        return _with_columns(joined, {o: out(F.col(v), types[v])
+                                      for o, v in outputs.items()}
+                             ).drop(*types)
+
+    def _literal_maps(self):
+        """{value column: (literal map or None when empty, fitted type
+        to cast to)}, compiled once; False when over ``SERVING_MAX_ROWS``.
+        NULL keys are left out: a map literal cannot hold one, and the
+        batch equi-join never matches one either."""
+        if self._maps is None:
+            if self.n is not None and self.n > SERVING_MAX_ROWS:
+                self._maps = False
+                return False
+            rows = (self.frame.collect() if self.n is not None
+                    else self.frame.limit(SERVING_MAX_ROWS + 1).collect())
+            if len(rows) > SERVING_MAX_ROWS:
+                self._maps = False
+                return False
+            rows = [r for r in rows if r[self.key] is not None]
+            self._maps = {
+                f.name: (_literal_map((r[self.key], r[f.name]) for r in rows),
+                         _cast_target(f.dataType))
+                for f in self.frame.schema.fields if f.name != self.key}
+        return self._maps
 
 
 # ---------------------------------------------------------------------------

@@ -2522,7 +2522,8 @@ def q_events_latest(spark, sf_dir):
       (struct buffers aren't hash-mutable), costing a map-side
       chunk sort.
 
-    A/B sf1 (1M events, scripts/ab_events_band.py + this session):
+    A/B sf1 (1M events; record: SCALE.md, Round 12 "Fix 1" and its
+    late-round addendum):
     window 1.86 s / struct-max 1.78 s / decimal pack 1.45 s / long
     pack 1.01 s, identical results on all four — the long tier sits on
     the profile twin's 1.10 s scalar-max floor."""
@@ -2604,7 +2605,7 @@ _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL
 #       the end: the exact rational sum gets exactly one double
 #       rounding, same as DuckDB's CAST(sum(decimal) AS DOUBLE).
 #
-# A/B at sf1 (scripts/ab_cents.py, 6M-row scan+agg, min of 3
+# A/B at sf1 (record: SCALE.md, Round 10 profile; 6M-row scan+agg, min of 3
 # interleaved): decimal 1.156s / cents-long 0.368s / pure-double
 # (inexact) 0.332s / no-arithmetic floor 0.273s — the cents path
 # removes ~97% of the arithmetic residual and value-parity holds at
@@ -4208,6 +4209,7 @@ def _fitted_group_agg_approx(spark, sf_dir, kind):
     aggregate.  Returns the pinned Aggregator + the literal rows."""
     import os
 
+    from .base import FittedLookup
     from .operators import Aggregator
 
     key = (kind, os.path.abspath(sf_dir))
@@ -4223,7 +4225,7 @@ def _fitted_group_agg_approx(spark, sf_dir, kind):
                              groupby=["l_suppkey"], func="approx_nunique")
         agg.fit(li)
         lookup, outmap = agg._lookups["l_suppkey"]
-        rows = lookup.collect()
+        rows = lookup.frame.collect()
         val_col = next(iter(outmap.values()))
         fitted = {r["__dfp_key"]: r[val_col] for r in rows}
 
@@ -4266,8 +4268,9 @@ def _fitted_group_agg_approx(spark, sf_dir, kind):
         finally:
             con.close()
         # pin the lookup so transform replays EXACTLY these values
-        pinned = spark.createDataFrame(rows, lookup.schema)
-        agg._lookups["l_suppkey"] = (pinned, outmap)
+        pinned = spark.createDataFrame(rows, lookup.frame.schema)
+        agg._lookups["l_suppkey"] = (FittedLookup(pinned, lookup.key),
+                                     outmap)
         _SKETCH_FIT_CACHE[key] = (agg, sorted(fitted.items()))
     return _SKETCH_FIT_CACHE[key]
 

@@ -9,11 +9,11 @@ Spark-first design:
 - **global**: one combined ``df.agg`` job at fit (a single scan computes
   every requested scalar); transform adds ``F.lit(scalar)`` columns —
   constant-folded by Catalyst, zero runtime cost.
-- **grouped**: fit builds one *lookup DataFrame* per distinct group key via
-  ``groupBy(g).agg(...)`` — inputs sharing a group key are fused into one
-  aggregate (one shuffle, map-side partial aggregation).  Transform joins
-  the lookup back on the key; unseen keys null out via the left join,
-  matching the reference's pandas ``.map`` miss → NaN.  The lookup stays a
+- **grouped**: fit builds one :class:`~..base.FittedLookup` per distinct
+  group key via ``groupBy(g).agg(...)`` — inputs sharing a group key are
+  fused into one aggregate (one shuffle, map-side partial aggregation).
+  Transform joins the lookup back on the key; unseen keys null out via
+  the left join, matching the reference's pandas ``.map`` miss → NaN.  The lookup stays a
   DataFrame (never a driver dict): at 100 TB a frequency table over a
   high-cardinality key can be GBs — AQE picks broadcast vs shuffle join at
   runtime from actual sizes.
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
+from ..base import FittedLookup, SparkDFPBase, nan_to_null
 
 
 def _resolve_func(func):
@@ -101,7 +101,7 @@ class Aggregator(SparkDFPBase):
         self.groupby = list(groupby or [])
         self.func = func
         self.vals = []          # global mode: fitted scalars, one per input
-        self._lookups = {}      # grouped mode: groupkey -> (lookup DataFrame, {output: agg_col})
+        self._lookups = {}      # grouped mode: groupkey -> (FittedLookup, {output: agg_col})
         assert len(self.inputs) == len(self.outputs)
 
     def _agg_col(self, df: DataFrame, input: str) -> Column:
@@ -137,10 +137,21 @@ class Aggregator(SparkDFPBase):
                     .agg(*aggs)
                     .filter(F.col("__dfp_key").isNotNull())
                 )
-                self._lookups[g] = (lookup, {o: f"__dfp_{o}" for _, o in pairs})
+                # Entry count left unknown, so the join-back carries no
+                # broadcast hint (r11, VERDICT r10 #8 — hint tried and
+                # REVERTED when measured worse): a hinted lookup computes
+                # EAGERLY through its duplicated upstream lineage into a
+                # driver build before the probe side can stream
+                # (flagship sf0.1 min-of-6: plain 1.82 s vs forced
+                # broadcast 2.00 s).  The plain join lets AQE convert to
+                # broadcast from TRUE post-shuffle sizes (Catalyst's
+                # static estimate of the aggregate inflates ~65× through
+                # upstream join estimates).
+                self._lookups[g] = (FittedLookup(lookup, "__dfp_key"),
+                                    {o: f"__dfp_{o}" for _, o in pairs})
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, serving: bool = False) -> DataFrame:
         if not self.groupby:
             return df.withColumns(
                 {output: F.lit(v) for output, v in zip(self.outputs, self.vals)}
@@ -157,7 +168,8 @@ class Aggregator(SparkDFPBase):
         # to NULL exactly like the fitted lookup's dropped-null-key miss.
         func_name = (self.func if isinstance(self.func, str)
                      else getattr(self.func, "__name__", None))
-        if df is getattr(self, "_fit_frame", None) and func_name in _WINDOWABLE:
+        if (not serving and df is getattr(self, "_fit_frame", None)
+                and func_name in _WINDOWABLE):
             from pyspark.sql.window import Window
 
             by_key: dict[str, list[tuple[str, str]]] = {}
@@ -173,20 +185,9 @@ class Aggregator(SparkDFPBase):
                 })
             return df
         for g, (lookup, outmap) in self._lookups.items():
-            # Join-back strategy (r11, VERDICT r10 #8 — broadcast hint
-            # tried and REVERTED when measured worse): hinting the
-            # fitted lookup broadcast forces it to compute EAGERLY
-            # through its duplicated upstream lineage into a driver
-            # build before the probe side can stream — flagship sf0.1
-            # min-of-6: plain 1.82 s vs forced broadcast 2.00 s.  The
-            # plain join lets AQE convert to broadcast at runtime from
-            # TRUE post-shuffle sizes (Catalyst's static estimate of
-            # the aggregate inflates ~65× through upstream join
-            # estimates, so no sound static gate can fire).
-            df = (
-                df.join(lookup, on=nan_to_null(df, g) == lookup["__dfp_key"], how="left")
-                .drop("__dfp_key")
-            )
-            df = df.withColumns({o: F.col(tmp) for o, tmp in outmap.items()})
-            df = df.drop(*outmap.values())
+            df = lookup.apply(df, nan_to_null(df, g), outmap,
+                              serving=serving)
         return df
+
+    def serving_transform(self, df: DataFrame) -> DataFrame:
+        return self.transform(df, serving=True)

@@ -14,16 +14,12 @@ Spark-first design: the fitted dictionary is a *lookup DataFrame*
 
 The global-order ``row_number`` window runs over the **distinct set only**
 (cardinality ≪ rows), so the single-partition window is not a scale
-bottleneck.  Transform is a left join on the normalized value with
-``coalesce(id, default_id)``.  The broadcast hint is *size-gated*: fit
-already knows each column's distinct count (it comes back in the same
-collect as the default id), so transform hints ``broadcast`` only when
-the dictionary is under ``broadcast_max_rows`` (default 500k entries —
-roughly the autoBroadcastJoinThreshold at ~20 B/entry); above that it
-emits a plain join and lets AQE pick the strategy.  A high-cardinality
-dictionary (e.g. a card1_addr1-style composite) must never be forced
-into executor/driver memory.  No driver-side dict is ever materialized
-except the per-column (cardinality, reserved-class id) scalars.
+bottleneck.  Each column's dictionary is a :class:`~..base.FittedLookup`
+applied with ``coalesce(id, default_id)``; fit already knows each
+column's distinct count (it comes back in the same collect as the
+default id), so the lookup's size-gated broadcast hint applies.  No
+driver-side dict is ever materialized except the per-column
+(cardinality, reserved-class id) scalars.
 """
 
 from __future__ import annotations
@@ -31,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import PARM_ALL, SparkDFPBase, field_type, is_floating, literal_df
+from ..base import (PARM_ALL, FittedLookup, SparkDFPBase, field_type,
+                    is_floating, literal_df)
 
 EXTRA = "extra_category_"
 
@@ -41,18 +38,10 @@ class ComplementLabelEncoder(SparkDFPBase):
     #: coalesce — row multiset preserved exactly
     ROW_PRESERVING = True
 
-    #: dictionaries with at most this many entries get a broadcast hint;
-    #: larger ones go through a plain (AQE-planned) shuffle join.
-    BROADCAST_MAX_ROWS = 500_000
-
-    def __init__(self, inputs=PARM_ALL, outputs=PARM_ALL,
-                 broadcast_max_rows: int | None = None):
+    def __init__(self, inputs=PARM_ALL, outputs=PARM_ALL):
         self.inputs = inputs
         self.outputs = outputs
-        self.broadcast_max_rows = (
-            self.BROADCAST_MAX_ROWS if broadcast_max_rows is None
-            else broadcast_max_rows)
-        # input col -> (lookup DataFrame(__dfp_val, __dfp_id), default_id, cardinality)
+        # input col -> (FittedLookup(__dfp_val -> __dfp_id), default_id)
         self._lookups = {}
 
     @staticmethod
@@ -81,9 +70,6 @@ class ComplementLabelEncoder(SparkDFPBase):
         The pipeline's fused-fit path crossJoins deferred scalar fit
         aggregates of LATER steps into that collect, so the whole fit
         phase runs as ONE Spark job (VERDICT r12 #2)."""
-        from ..base import SERVING_CACHE_ATTR
-
-        self.__dict__.pop(SERVING_CACHE_ATTR, None)  # refit invalidates
         self.inputs = self.replace_PARM_ALL(df, self.inputs)
         self.outputs = self.replace_PARM_ALL(df, self.outputs)
         self._lookups = {}
@@ -136,23 +122,17 @@ class ComplementLabelEncoder(SparkDFPBase):
             lookup = (lookup_all.filter(F.col("__dfp_col") == input)
                       .select("__dfp_val", "__dfp_id"))
             default_id, n = stats[input]
-            self._lookups[input] = (lookup, default_id, n)
+            self._lookups[input] = (FittedLookup(lookup, "__dfp_val", n),
+                                    default_id)
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, serving: bool = False) -> DataFrame:
         for input, output in zip(self.inputs, self.outputs):
-            lookup, default_id, n = self._lookups[input]
-            if n <= self.broadcast_max_rows:
-                lookup = F.broadcast(lookup)
-            key = self._normalized(df, input).alias("__dfp_join_key")
-            df = (
-                df.join(
-                    lookup, on=key == lookup["__dfp_val"], how="left"
-                )
-                .withColumn(
-                    output,
-                    F.coalesce(F.col("__dfp_id"), F.lit(default_id)).cast("int"),
-                )
-                .drop("__dfp_val", "__dfp_id")
-            )
+            lookup, default_id = self._lookups[input]
+            df = lookup.apply(df, self._normalized(df, input),
+                              {output: "__dfp_id"}, F.lit(default_id),
+                              serving)
         return df
+
+    def serving_transform(self, df: DataFrame) -> DataFrame:
+        return self.transform(df, serving=True)

@@ -140,9 +140,6 @@ class Scaler(SparkDFPBase):
     def _deferred_fit_consume(self, row, prefix: str):
         """Complete the fit from the fused job's row — same arithmetic
         as fit()'s minmax/min branches."""
-        from ..base import SERVING_CACHE_ATTR
-
-        self.__dict__.pop(SERVING_CACHE_ATTR, None)
         self.offsets, self.scales = [], []
         for i in range(len(self.inputs)):
             lo = row[f"{prefix}lo{i}"]

@@ -7,9 +7,9 @@ TargetEncoder (sklearn ``TargetEncoder`` / CatBoost-style smoothing):
 with few observations shrink toward the global mean (``m`` is the
 smoothing pseudo-count).  Fit is ONE grouped aggregate (count + mean
 per category, both partial-aggregatable) plus a global 1-row agg;
-fitted state is a lookup DataFrame applied by broadcast-gated join —
-at 100 TB a hundred-million-row category table stays a join, never a
-driver literal.  Unseen categories and NULL get the global mean
+fitted state is a :class:`~..base.FittedLookup` per column, applied by
+broadcast-gated join — at 100 TB a hundred-million-row category table
+stays a join, never a driver literal.  Unseen categories and NULL get the global mean
 (sklearn's unseen behavior).
 
 HashingEncoder: ``bucket(c) = md5_int(c) % n_buckets`` — stateless
@@ -25,11 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase
-
-#: Same bound the label encoder uses: lookup tables under this are
-#: safely broadcast; above it AQE picks the join strategy.
-BROADCAST_MAX_ROWS = 2_000_000
+from ..base import LOOKUP_BROADCAST_MAX_ROWS, FittedLookup, SparkDFPBase
 
 
 class TargetEncoder(SparkDFPBase):
@@ -44,17 +40,17 @@ class TargetEncoder(SparkDFPBase):
         self.target = target
         self.smoothing = float(smoothing)
         self.global_mean_ = None
-        self.lookups_ = []          # per input: DataFrame(__cat, __code)
-        self.cards_ = []            # per input: fitted category count
+        # per input: FittedLookup(__cat_<out> -> __code_<out>)
+        self.lookups_ = []
 
     def fit(self, df: DataFrame, **params):
         t = F.col(self.target).cast("double")
         m = F.lit(self.smoothing)
-        self.lookups_, self.cards_ = [], []
+        self.lookups_ = []
         if not self.inputs:
             self.global_mean_ = df.agg(F.avg(t)).collect()[0][0]
             return self
-        for i, c in enumerate(self.inputs):
+        for i, (c, o) in enumerate(zip(self.inputs, self.outputs)):
             # ONE scan per column: NULL categories are kept in the
             # grouped aggregate so the global mean falls out of the
             # same pass (sum of sums / sum of counts == avg), and the
@@ -82,31 +78,27 @@ class TargetEncoder(SparkDFPBase):
                 n_cats = stats.agg(card.alias("c")).collect()[0]["c"]
             g = F.lit(self.global_mean_)
             mean = F.col("__s") / F.col("__n")
+            # lookup columns are named after the output column, so two
+            # encoded columns never share a name in one plan
             lk = (stats.filter(F.col("__cat").isNotNull())
-                  .select("__cat",
+                  .select(F.col("__cat").alias(f"__cat_{o}"),
                           ((F.col("__n") * mean + m * g)
-                           / (F.col("__n") + m)).alias("__code")))
-            self.lookups_.append(lk)
+                           / (F.col("__n") + m)).alias(f"__code_{o}")))
             # cardinality resolved AT FIT (fit runs jobs; transform must
-            # stay job-free — a count() per transform call would add one
-            # Spark job per column per application at serving time)
-            self.cards_.append(n_cats)
+            # stay job-free)
+            self.lookups_.append(FittedLookup(lk, f"__cat_{o}", n_cats))
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, serving: bool = False) -> DataFrame:
         if self.global_mean_ is None:
             raise RuntimeError("TargetEncoder.transform before fit")
-        out = df
-        for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
-                               self.cards_):
-            lkr = (lk.withColumnRenamed("__cat", f"__cat_{o}")
-                     .withColumnRenamed("__code", f"__code_{o}"))
-            lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
-            out = (out.join(lkb, out[c] == F.col(f"__cat_{o}"), "left")
-                   .withColumn(o, F.coalesce(F.col(f"__code_{o}"),
-                                             F.lit(self.global_mean_)))
-                   .drop(f"__cat_{o}", f"__code_{o}"))
-        return out
+        for c, o, lk in zip(self.inputs, self.outputs, self.lookups_):
+            df = lk.apply(df, F.col(c), {o: f"__code_{o}"},
+                          F.lit(self.global_mean_), serving)
+        return df
+
+    def serving_transform(self, df: DataFrame) -> DataFrame:
+        return self.transform(df, serving=True)
 
 
 class CVTargetEncoder(SparkDFPBase):
@@ -219,7 +211,8 @@ class CVTargetEncoder(SparkDFPBase):
             lkr = (lk.withColumnRenamed("__cat", f"__cat_{o}")
                      .withColumnRenamed("__fold", f"__fold_{o}")
                      .withColumnRenamed("__code", f"__code_{o}"))
-            lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
+            lkb = (F.broadcast(lkr) if n <= LOOKUP_BROADCAST_MAX_ROWS
+                   else lkr)
             out = (out.join(lkb, (out[c] == F.col(f"__cat_{o}"))
                             & (out["__dfp_fold"] == F.col(f"__fold_{o}")),
                             "left")

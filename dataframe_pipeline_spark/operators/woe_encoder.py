@@ -13,12 +13,11 @@ over-indexes on the positive class.
 Spark-first: fit is ONE global aggregate (two scalars) plus ONE
 groupBy per input column producing a (category → woe) lookup whose
 arithmetic runs inside the aggregate plan (no driver math beyond the
-two scalars); transform is a size-gated broadcast left join per
-column, unseen/NULL categories → 0.0 (no evidence).  Same lookup
-discipline as TargetEncoder / FrequencyEncoder; the serving tier's
-literal-map compiler handles it via ``_serve_woe_encoder`` (registered
-in ``serving._SERVING_COMPILERS``), so a WOE-containing pipeline keeps
-the job-free LocalRelation fold online.
+two scalars); each column's (category → woe) table is a
+:class:`~..base.FittedLookup`, so transform is its size-gated broadcast
+left join, unseen/NULL categories → 0.0 (no evidence), and
+``serving_transform`` its literal map, which keeps a WOE-containing
+pipeline on the job-free LocalRelation fold online.
 
 Reference parity: the reference has no WOE surface; this extends the
 encoder family the same way TargetEncoder does (beyond-reference,
@@ -30,9 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..base import SparkDFPBase, nan_to_null
-
-BROADCAST_MAX_ROWS = 500_000
+from ..base import FittedLookup, SparkDFPBase, nan_to_null
 
 
 class WOEEncoder(SparkDFPBase):
@@ -46,60 +43,60 @@ class WOEEncoder(SparkDFPBase):
         self.outputs = list(outputs or [])
         self.target = target
         self.alpha = float(alpha)
-        self.lookups_ = []      # per input: DataFrame(__cat, __woe)
-        self.cards_ = []        # per input: fitted category count
+        self.lookups_ = []      # per input: FittedLookup(__cat_<out> -> __woe_<out>)
         self.totals_ = None     # (pos_total, neg_total)
 
     def fit(self, df: DataFrame, **params):
         y = F.col(self.target).cast("double")
         a = F.lit(self.alpha)
-        self.lookups_, self.cards_ = [], []
+        self.lookups_ = []
         if not self.inputs:
             row = df.agg(F.sum(y).alias("p"),
                          F.count(y).alias("n")).collect()[0]
             pos_t = float(row["p"] or 0.0)
             self.totals_ = (pos_t, float(row["n"]) - pos_t)
             return self
-        for i, c in enumerate(self.inputs):
+        for i, (c, o) in enumerate(zip(self.inputs, self.outputs)):
             # ONE scan per column (same device as TargetEncoder.fit):
             # NULL/NaN categories stay in the grouped aggregate so the
             # global totals re-sum from the materialized tiny frame,
-            # and the count()/transform joins read the checkpoint
-            # instead of re-scanning the training data.
+            # and the transform joins read the checkpoint instead of
+            # re-scanning the training data.
             stats = (df.groupBy(nan_to_null(df, c).alias("__cat"))
                      .agg(F.sum(y).alias("__pos"), F.count(y).alias("__n"))
                      .localCheckpoint())
+            # ONE collect per column returns the broadcast-gate
+            # cardinality AND (first column) the global totals, as in
+            # TargetEncoder.fit; the sum expressions are unchanged, so
+            # the totals stay bit-identical to a separate count() job.
+            card = F.count(F.when(F.col("__cat").isNotNull(), 1))
             if i == 0:
                 row = stats.agg(F.sum("__pos").alias("p"),
-                                F.sum("__n").alias("n")).collect()[0]
+                                F.sum("__n").alias("n"),
+                                card.alias("c")).collect()[0]
                 pos_t = float(row["p"] or 0.0)
                 self.totals_ = (pos_t, float(row["n"] or 0) - pos_t)
+            else:
+                row = stats.agg(card.alias("c")).collect()[0]
             pos_t, neg_t = self.totals_
             lk = (stats.filter(F.col("__cat").isNotNull())
                   .select(
-                      "__cat",
+                      F.col("__cat").alias(f"__cat_{o}"),
                       F.log(((F.col("__pos") + a)
                              / F.lit(pos_t + 2 * self.alpha))
                             / ((F.col("__n") - F.col("__pos") + a)
                                / F.lit(neg_t + 2 * self.alpha)))
-                      .alias("__woe")))
-            self.lookups_.append(lk)
-            self.cards_.append(lk.count())
+                      .alias(f"__woe_{o}")))
+            self.lookups_.append(FittedLookup(lk, f"__cat_{o}", row["c"]))
         return self
 
-    def transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, serving: bool = False) -> DataFrame:
         if self.totals_ is None:
             raise RuntimeError("WOEEncoder.transform before fit")
-        out = df
-        for c, o, lk, n in zip(self.inputs, self.outputs, self.lookups_,
-                               self.cards_):
-            lkr = (lk.withColumnRenamed("__cat", f"__cat_{o}")
-                     .withColumnRenamed("__woe", f"__woe_{o}"))
-            lkb = F.broadcast(lkr) if n <= BROADCAST_MAX_ROWS else lkr
-            out = (out.join(lkb,
-                            nan_to_null(out, c) == F.col(f"__cat_{o}"),
-                            "left")
-                   .withColumn(o, F.coalesce(F.col(f"__woe_{o}"),
-                                             F.lit(0.0)))
-                   .drop(f"__cat_{o}", f"__woe_{o}"))
-        return out
+        for c, o, lk in zip(self.inputs, self.outputs, self.lookups_):
+            df = lk.apply(df, nan_to_null(df, c), {o: f"__woe_{o}"},
+                          F.lit(0.0), serving)
+        return df
+
+    def serving_transform(self, df: DataFrame) -> DataFrame:
+        return self.transform(df, serving=True)

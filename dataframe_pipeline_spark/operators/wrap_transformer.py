@@ -25,12 +25,13 @@ Arrow-batched pandas UDF for distributed apply.  Test-scale fit /
 any-scale apply; at 100 TB prefer the native operators above, whose fit
 is distributed too.
 
-The LabelEncoder lookup join is *size-gated* like ComplementLabelEncoder:
-fit counts the distinct values (one extra action on the already-computed
-distinct frame) and transform hints ``broadcast`` only under
-``BROADCAST_MAX_ROWS``; a high-cardinality dictionary goes through a
-plain join so AQE picks the strategy instead of forcing the lookup into
-executor memory.
+The LabelEncoder dictionary is a :class:`~..base.FittedLookup` like
+ComplementLabelEncoder's: fit counts the distinct values (one extra
+action on the already-computed distinct frame), which sizes the
+lookup's broadcast gate.  sklearn's classes may include NULL/NaN; that
+class's id rides beside the lookup and is applied with
+``when(key.isNull(), null_id)``, since neither an equi-join nor a
+literal map matches a NULL key.
 """
 
 from __future__ import annotations
@@ -38,14 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..base import PARM_ALL, SparkDFPBase, field_type, is_floating, nan_to_null
+from ..base import PARM_ALL, FittedLookup, SparkDFPBase, nan_to_null
 
 
 class WrapTransformer(SparkDFPBase):
-    #: lookups with at most this many entries get a broadcast hint;
-    #: larger ones go through a plain (AQE-planned) join.
-    BROADCAST_MAX_ROWS = 500_000
-
     #: generic (non-mapped) wrap only: the driver-side sklearn ``fit``
     #: refuses inputs above this many rows instead of attempting an
     #: unbounded ``toPandas()`` — the one place the reference semantics
@@ -137,16 +134,19 @@ class WrapTransformer(SparkDFPBase):
         # sklearn LabelEncoder: classes_ = sorted unique values.  NULL sorts
         # last (like NaN in numpy sort) via asc_nulls_last.  The global
         # row_number window runs over the distinct set only (cardinality
-        # ≪ rows) so it is not a scale bottleneck; the count() on the
+        # ≪ rows) so it is not a scale bottleneck; one count job on the
         # persisted distinct frame returns the cardinality that gates the
-        # transform-time broadcast hint.
+        # transform-time broadcast hint and whether NULL is a class (it
+        # then has the last id).
         vals = df.select(nan_to_null(df, c).alias("__dfp_val")).distinct().persist()
-        n = vals.count()
+        row = vals.agg(F.count(F.lit(1)).alias("n"),
+                       F.count("__dfp_val").alias("nn")).collect()[0]
         w = Window.orderBy(F.col("__dfp_val").asc_nulls_last())
         lookup = vals.select(
             "__dfp_val", (F.row_number().over(w) - 1).cast("int").alias("__dfp_id")
         )
-        return (lookup, n)
+        null_id = row["n"] - 1 if row["n"] > row["nn"] else None
+        return (FittedLookup(lookup, "__dfp_val", row["n"]), null_id)
 
     def _fit_scale(self, df: DataFrame, cols):
         aggs = []
@@ -176,24 +176,17 @@ class WrapTransformer(SparkDFPBase):
         return [row[f"m{i}"] for i in range(len(cols))]
 
     # -- transform ---------------------------------------------------------
-    def transform(self, df: DataFrame) -> DataFrame:
+    def transform(self, df: DataFrame, serving: bool = False) -> DataFrame:
         for input, output in zip(self.inputs, self.outputs):
             in_cols = list(input) if isinstance(input, tuple) else [input]
             out_cols = list(output) if isinstance(output, tuple) else [output]
             state = self._state[input]
             if self._kind == "LabelEncoder":
-                lookup, n = state
-                if n <= self.BROADCAST_MAX_ROWS:
-                    lookup = F.broadcast(lookup)
-                df = (
-                    df.join(
-                        lookup,
-                        on=nan_to_null(df, in_cols[0]).eqNullSafe(lookup["__dfp_val"]),
-                        how="left",
-                    )
-                    .withColumn(out_cols[0], F.col("__dfp_id"))
-                    .drop("__dfp_val", "__dfp_id")
-                )
+                lookup, null_id = state
+                key = nan_to_null(df, in_cols[0])
+                df = lookup.apply(
+                    df, key, {out_cols[0]: "__dfp_id"},
+                    F.when(key.isNull(), F.lit(null_id)), serving)
             elif self._kind in ("StandardScaler", "MinMaxScaler"):
                 df = df.withColumns(
                     {
@@ -212,6 +205,9 @@ class WrapTransformer(SparkDFPBase):
                 df = df.withColumn(
                     out_cols[0], self._generic_udf_col(state, in_cols))
         return df
+
+    def serving_transform(self, df: DataFrame) -> DataFrame:
+        return self.transform(df, serving=True)
 
     @staticmethod
     def _generic_udf_col(tr, in_cols):

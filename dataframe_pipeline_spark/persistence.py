@@ -28,8 +28,6 @@ import os
 from pyspark.cloudpickle import dumps, loads
 from pyspark.sql import DataFrame, SparkSession
 
-from .base import SERVING_CACHE_ATTR
-
 
 class _DFRef:
     """Placeholder for a DataFrame inside pickled operator state."""
@@ -44,12 +42,12 @@ class _DFRef:
 
 class _NestedObj:
     """Placeholder for a fitted sub-object inside pickled operator
-    state — e.g. the IVFIndex an AnnAnnotator step carries.  Any
-    attribute value whose CLASS declares ``_dfp_partition_hints`` is
-    decomposed field-by-field (its frames written in their scale
-    layout, its ``_dfp_transient`` caches dropped) instead of being
-    handed whole to cloudpickle, which would choke on the embedded
-    DataFrame / py4j handles."""
+    state — e.g. the IVFIndex an AnnAnnotator step carries, or an
+    encoder's FittedLookup.  Any attribute value whose CLASS declares
+    ``_dfp_partition_hints`` is decomposed field-by-field (its frames
+    written in their scale layout, its ``_dfp_transient`` caches
+    dropped) instead of being handed whole to cloudpickle, which would
+    choke on the embedded DataFrame / py4j handles."""
 
     def __init__(self, cls, state):
         self.cls = cls
@@ -105,12 +103,7 @@ def save_pipeline(pipe, path: str) -> None:
     for i, step in enumerate(steps):
         frames: list = []
         hints = getattr(step, "_dfp_partition_hints", {})
-        # Drop the serving tier's compiled-literal cache: its values are
-        # pyspark Column objects (py4j handles) that cloudpickle cannot
-        # serialize — without this, fit -> serving_transform ->
-        # save_pipeline crashes.  The cache is a pure derivation of the
-        # fitted lookups; serving_transform rebuilds it after load.
-        # Likewise drop the step's own ``_dfp_transient`` attrs (not just
+        # Drop the step's own ``_dfp_transient`` attrs (not just
         # nested sub-objects'): a top-level IVFIndex saved via
         # save_operator must not pickle its driver-resident serving
         # replica — a reloaded index whose parquet cells were later
@@ -118,7 +111,6 @@ def save_pipeline(pipe, path: str) -> None:
         # pre-append corpus from the pickled replica while search_batch
         # sees the appended vectors.  Transients rebuild lazily on load.
         transient = set(getattr(type(step), "_dfp_transient", ()))
-        transient.add(SERVING_CACHE_ATTR)
         state = {
             k: _extract(v, i, frames, part_cols=hints.get(k))
             for k, v in vars(step).items()

@@ -28,10 +28,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Size gate for explicit dim-broadcast hints — the query-shape analog
-#: of label_encoder's BROADCAST_MAX_ROWS gate.  A dim under this bound
-#: is safely an executor-memory broadcast; above it the hint is
-#: withheld and AQE picks the strategy from the true runtime size (it
-#: will still broadcast when the materialized dim turns out small).
+#: of the fitted lookups' LOOKUP_BROADCAST_MAX_ROWS gate (base.py).  A
+#: dim under this bound is safely an executor-memory broadcast; above
+#: it the hint is withheld and AQE picks the strategy from the true
+#: runtime size (it will still broadcast when the materialized dim
+#: turns out small).
 #: 256 MB of *source-scan parquet* over-bounds the narrow pre-joined
 #: dim by the column-pruning factor, so the gate errs conservative in
 #: the OOM-safe direction.
@@ -88,10 +89,18 @@ def maybe_shuffle_hash(df: DataFrame, bound_df: DataFrame | None = None,
     aggregates, FK-join dims): e.g. a lineitem-per-orderkey
     pre-aggregate has at most one row per orders row, so the orders
     SCAN statistic is the sound bound.  A fact side at 100× data blows
-    past the gate and the plan degrades gracefully to sort-merge."""
+    past the gate and the plan degrades gracefully to sort-merge.
+
+    The gate has a floor too: a side at or under the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` stays unhinted, because the
+    planner broadcasts it (a hint here would displace that broadcast
+    with two exchanges)."""
     limit = SHJ_BUILD_MAX_BYTES if max_bytes is None else max_bytes
     src = df if bound_df is None else bound_df
-    return df.hint("shuffle_hash") if stats_bytes(src) <= limit else df
+    size = stats_bytes(src)
+    floor = df.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return df.hint("shuffle_hash") if floor < size <= limit else df
 
 
 def salted_join(fact: DataFrame, dim: DataFrame, on: str | list[str],

@@ -1,28 +1,29 @@
-"""Low-latency online-scoring tier: compile fitted lookup state to
-literal expressions so a 1-row transform never launches a Spark job.
+"""Low-latency online-scoring tier: a fitted pipeline scores one row
+(or a tiny micro-batch) without launching a Spark job.
 
 Batch transform plans JOIN fitted lookup tables — the scale-correct
 shape (lookups can be arbitrarily large; size-gated broadcast / AQE pick
-the join strategy).  For ONLINE serving — one row or a tiny micro-batch
-per request — that plan costs a full Spark job per request: ~240 ms of
-scheduling and task dispatch for well under 1 ms of actual work
-(BENCH r4 ``online_p50_ms.exec_only``).
+the join strategy).  For ONLINE serving that plan costs a full Spark job
+per request: ~240 ms of scheduling and task dispatch for well under
+1 ms of actual work (BENCH r4 ``online_p50_ms.exec_only``).
 
-``serving_transform`` rewrites each lookup-joining step over a literal
-``MapType`` expression (``F.create_map`` + ``F.element_at``) whose
-entries are collected ONCE from the fitted lookup (size-gated by
-``SERVING_MAX_ROWS`` — a dictionary too big to inline falls back to the
-join plan for that step).  Every other operator in this package already
-compiles to pure Column arithmetic.  The resulting plan over a local
-(driver-side) input relation is join-free and deterministic, so
-Catalyst's ``ConvertToLocalRelation`` folds the ENTIRE transform into a
-``LocalRelation`` during optimization — ``collect()`` is a driver-side
-expression evaluation, zero jobs, zero task scheduling.
+:func:`serving_transform` calls each step's ``serving_transform`` hook
+where it has one, else its ``transform``.  Every dictionary encoder
+keeps its fitted state as a :class:`~.base.FittedLookup`, whose serving
+apply is an ``element_at`` on a literal ``MapType`` compiled once from
+one collect of the lookup (gated by ``SERVING_MAX_ROWS``: a dictionary
+too big to inline falls back to the join plan for that step).  Every
+other operator already compiles to pure Column arithmetic.  The
+resulting plan over a local (driver-side) input relation is join-free
+and deterministic, so Catalyst's ``ConvertToLocalRelation`` folds the
+ENTIRE transform into a ``LocalRelation`` during optimization —
+``collect()`` is a driver-side expression evaluation, zero jobs, zero
+task scheduling.  An ANN stage (similarity.AnnAnnotator) uses the same
+hook to probe its in-process index replica.
 
-This is the second deploy shape of the reference
-(/root/reference/benchmarks/RunBench.py:69-77 — fitted pipeline scoring
-single rows); the compiled-literal trick is the Spark analog of its
-compiled-plan export.
+This is the second deploy shape of the reference (benchmarks/RunBench.py
+— fitted pipeline scoring single rows); the compiled-literal trick is
+the Spark analog of its compiled-plan export.
 
 Scale note: the fallback keeps correctness at any cardinality, and the
 collected literals are exactly the state a size-gated broadcast would
@@ -32,244 +33,8 @@ ship to every executor — the serving path moves it into the plan instead.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .base import SERVING_CACHE_ATTR
-
-#: lookup dictionaries with at most this many entries are inlined as
-#: literal maps; larger ones keep the join plan (a >100k-literal
-#: expression would bloat analysis time past the job cost it saves).
-SERVING_MAX_ROWS = 100_000
-
-# Cache lives in base.py so fit() can invalidate it on refit and
-# persistence can strip it (Column handles are not picklable).
-_CACHE_ATTR = SERVING_CACHE_ATTR
-
-
-def _literal_map(pairs):
-    """map<k,v> literal from python pairs; None when empty (create_map()
-    with no args has an untyped map type)."""
-    args = []
-    for k, v in pairs:
-        args += [F.lit(k), F.lit(v)]
-    return F.create_map(*args) if args else None
-
-
-# -- per-operator compilers ------------------------------------------------
-
-def _serve_label_encoder(op, df: DataFrame) -> DataFrame:
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for _, _, n in op._lookups.values()):
-            cache = False  # dictionary too large to inline
-        else:
-            cache = {}
-            for input, (lookup, default_id, _n) in op._lookups.items():
-                pairs = [(r["__dfp_val"], r["__dfp_id"])
-                         for r in lookup.collect()]
-                cache[input] = (_literal_map(pairs), default_id)
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for input, output in zip(op.inputs, op.outputs):
-        m, default_id = cache[input]
-        key = op._normalized(df, input)
-        looked = F.element_at(m, key) if m is not None else F.lit(None)
-        df = df.withColumn(
-            output, F.coalesce(looked, F.lit(default_id)).cast("int"))
-    return df
-
-
-def _serve_aggregator(op, df: DataFrame) -> DataFrame:
-    from .base import nan_to_null
-
-    if not op.groupby:            # global mode is already literal
-        return op.transform(df)
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        for g, (lookup, outmap) in op._lookups.items():
-            rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
-            if len(rows) > SERVING_MAX_ROWS:
-                cache = False
-                break
-            # one literal map per output column; value dtype recorded so
-            # an empty fitted lookup still yields a correctly-typed NULL
-            maps = {}
-            for o, tmp in outmap.items():
-                maps[o] = (_literal_map([(r["__dfp_key"], r[tmp])
-                                         for r in rows]),
-                           lookup.schema[tmp].dataType)
-            cache[g] = maps
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for g, (_lookup, outmap) in op._lookups.items():
-        key = nan_to_null(df, g)
-        updates = {}
-        for o, (m, dtype) in cache[g].items():
-            looked = (F.element_at(m, key) if m is not None
-                      else F.lit(None))
-            # cast to the fitted lookup's dtype: python literals can
-            # narrow (int -> int32) vs the batch join's column type
-            updates[o] = looked.cast(dtype)
-        df = df.withColumns(updates)
-    return df
-
-
-def _serve_frequency_encoder(op, df: DataFrame) -> DataFrame:
-    from .base import nan_to_null
-
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        for input, lookup in op._lookups.items():
-            rows = lookup.limit(SERVING_MAX_ROWS + 1).collect()
-            if len(rows) > SERVING_MAX_ROWS:
-                cache = False
-                break
-            cache[input] = (
-                _literal_map([(r["__dfp_val"], r["__dfp_cnt"])
-                              for r in rows]),
-                lookup.schema["__dfp_cnt"].dataType)
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    default = 0.0 if op.normalize else 1
-    for input, output in zip(op.inputs, op.outputs):
-        m, dtype = cache[input]
-        looked = (F.element_at(m, nan_to_null(df, input))
-                  if m is not None else F.lit(None))
-        # cast to the fitted count dtype (python int literals narrow)
-        df = df.withColumn(
-            output, F.coalesce(looked, F.lit(default)).cast(dtype))
-    return df
-
-
-def _serve_target_encoder(op, df: DataFrame) -> DataFrame:
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for n in op.cards_):
-            cache = False
-        else:
-            cache = [
-                _literal_map([(r["__cat"], r["__code"])
-                              for r in lk.collect()])
-                for lk in op.lookups_]
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for c, o, m in zip(op.inputs, op.outputs, cache):
-        looked = F.element_at(m, F.col(c)) if m is not None else F.lit(None)
-        df = df.withColumn(
-            o, F.coalesce(looked, F.lit(op.global_mean_)).cast("double"))
-    return df
-
-
-def _serve_wrap_transformer(op, df: DataFrame) -> DataFrame:
-    """Only the LabelEncoder mapping joins a lookup; every other wrap
-    mode is already literal arithmetic or an Arrow UDF (an Arrow kernel
-    cannot fold into a local plan — it falls through to the batch
-    transform)."""
-    from .base import nan_to_null
-
-    if op._kind != "LabelEncoder":
-        return op.transform(df)
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for _, n in op._state.values()):
-            cache = False
-        else:
-            cache = {}
-            for input, (lookup, _n) in op._state.items():
-                rows = lookup.collect()
-                # sklearn LabelEncoder classes may include the NULL/NaN
-                # class (eqNullSafe join); map literals cannot hold a
-                # NULL key, so it rides separately
-                null_id = next((r["__dfp_id"] for r in rows
-                                if r["__dfp_val"] is None), None)
-                m = _literal_map([(r["__dfp_val"], r["__dfp_id"])
-                                  for r in rows
-                                  if r["__dfp_val"] is not None])
-                cache[input] = (m, null_id)
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for input, output in zip(op.inputs, op.outputs):
-        in_col = input if isinstance(input, str) else input[0]
-        out_col = output if isinstance(output, str) else output[0]
-        m, null_id = cache[input]
-        key = nan_to_null(df, in_col)
-        looked = F.element_at(m, key) if m is not None else F.lit(None)
-        df = df.withColumn(
-            out_col,
-            F.when(key.isNull(), F.lit(null_id)).otherwise(looked)
-            .cast("int"))
-    return df
-
-
-def _serve_woe_encoder(op, df: DataFrame) -> DataFrame:
-    """Same (category -> code) lookup shape as TargetEncoder, default
-    0.0 (no evidence) for unseen/NULL — mirrors the batch join's
-    ``coalesce(woe, 0.0)``."""
-    from .base import nan_to_null
-
-    cache = getattr(op, _CACHE_ATTR, None)
-    if cache is None:
-        if any(n > SERVING_MAX_ROWS for n in op.cards_):
-            cache = False
-        else:
-            cache = [
-                _literal_map([(r["__cat"], r["__woe"])
-                              for r in lk.collect()])
-                for lk in op.lookups_]
-        setattr(op, _CACHE_ATTR, cache)
-    if cache is False:
-        return op.transform(df)
-    for c, o, m in zip(op.inputs, op.outputs, cache):
-        key = nan_to_null(df, c)
-        looked = F.element_at(m, key) if m is not None else F.lit(None)
-        df = df.withColumn(
-            o, F.coalesce(looked, F.lit(0.0)).cast("double"))
-    return df
-
-
-def _serve_ann_annotator(op, df: DataFrame) -> DataFrame:
-    """ANN stage on the serving path (r10, VERDICT r9 #7): the
-    upstream serving plan is a folded LocalRelation, so ``collect()``
-    here is a driver-side expression evaluation — no job; each row's
-    vector then probes the in-process :class:`IVFServingReplica`
-    (AnnAnnotator.serve_rows → search_batch_local, bit-parity-tested
-    against the distributed ``search_batch``), and the local relation
-    is rebuilt with the annotation arrays appended, so downstream
-    steps keep folding.  Values, column order, and neighbour order are
-    identical to the batch transform (parity-tested in
-    test_serving.py); a row with no probed hits gets NULL arrays, as
-    the batch plan's left join does."""
-    from pyspark.sql import types as T
-
-    rows = df.collect()
-    hits = op.serve_rows([(r[op.id_col], r[op.vec_col]) for r in rows])
-    id_type = df.schema[op.id_col].dataType
-    schema = T.StructType(list(df.schema.fields) + [
-        T.StructField(f"{op.out_prefix}_ids", T.ArrayType(id_type)),
-        T.StructField(f"{op.out_prefix}_cosines",
-                      T.ArrayType(T.DoubleType())),
-    ])
-    new_rows = [list(r) + [ids or None, cos or None]
-                for r, (ids, cos) in zip(rows, hits)]
-    return local_rows_df(df.sparkSession, new_rows, schema)
-
-
-_SERVING_COMPILERS = {
-    "ComplementLabelEncoder": _serve_label_encoder,
-    "Aggregator": _serve_aggregator,
-    "FrequencyEncoder": _serve_frequency_encoder,
-    "TargetEncoder": _serve_target_encoder,
-    "WrapTransformer": _serve_wrap_transformer,
-    "WOEEncoder": _serve_woe_encoder,
-    "AnnAnnotator": _serve_ann_annotator,
-}
+from .base import SERVING_MAX_ROWS  # noqa: F401  (public gate constant)
 
 
 # -- local input construction ---------------------------------------------
@@ -369,12 +134,11 @@ def serve_rows(pipeline, spark, rows, schema) -> list:
 
 
 def serving_transform(pipeline, df: DataFrame) -> DataFrame:
-    """Transform ``df`` through a fitted pipeline with lookup-joining
-    steps compiled to literal maps.  Results are identical to
+    """Transform ``df`` through a fitted pipeline with every step's
+    serving hook (fitted lookups compiled to literal maps).  Results are identical to
     ``pipeline.transform`` (parity-tested); the plan over a local input
     folds to a LocalRelation — ``collect()`` launches no job."""
     X = df
     for step in pipeline.steps:
-        fn = _SERVING_COMPILERS.get(type(step).__name__)
-        X = fn(step, X) if fn is not None else step.transform(X)
+        X = getattr(step, "serving_transform", step.transform)(X)
     return X

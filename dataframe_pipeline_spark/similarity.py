@@ -1535,3 +1535,31 @@ class AnnAnnotator:
             hits = per_row.get(i, [])
             out.append(([h[0] for h in hits], [h[1] for h in hits]))
         return out
+
+    def serving_transform(self, df: DataFrame) -> DataFrame:
+        """The serving-path twin of :meth:`transform` (the hook
+        ``serving.serving_transform`` calls): the upstream serving plan
+        is a folded LocalRelation, so ``collect()`` here is a
+        driver-side expression evaluation — no job; each row's vector
+        then probes the in-process replica (:meth:`serve_rows`), and
+        the local relation is rebuilt with the annotation arrays
+        appended, so downstream steps keep folding.  Values, column
+        order and neighbour order are identical to the batch transform
+        (parity-tested in test_serving.py); a row with no probed hits
+        gets NULL arrays, as the batch plan's left join does."""
+        from pyspark.sql import types as T
+
+        from .serving import local_rows_df
+
+        rows = df.collect()
+        hits = self.serve_rows([(r[self.id_col], r[self.vec_col])
+                                for r in rows])
+        id_type = df.schema[self.id_col].dataType
+        schema = T.StructType(list(df.schema.fields) + [
+            T.StructField(f"{self.out_prefix}_ids", T.ArrayType(id_type)),
+            T.StructField(f"{self.out_prefix}_cosines",
+                          T.ArrayType(T.DoubleType())),
+        ])
+        new_rows = [list(r) + [ids or None, cos or None]
+                    for r, (ids, cos) in zip(rows, hits)]
+        return local_rows_df(df.sparkSession, new_rows, schema)

@@ -73,10 +73,10 @@ def test_load_is_lazy_lookup(spark, tmp_path):
     pipe.save(path)
 
     loaded = DataframePipeline.load(spark, path)
-    lookup, default_id, n = loaded.steps[0]._lookups["cat"]
-    assert lookup.__class__.__name__ == "DataFrame"
+    lookup, default_id = loaded.steps[0]._lookups["cat"]
+    assert lookup.frame.__class__.__name__ == "DataFrame"
     assert default_id == 3
-    assert n == 4
+    assert lookup.n == 4
 
 
 def test_ivf_index_roundtrip(spark, tmp_path):
@@ -138,7 +138,8 @@ def test_target_encoder_roundtrip(spark, tmp_path):
     a = sorted((r.id, round(r.code, 9)) for r in enc.transform(df).collect())
     b = sorted((r.id, round(r.code, 9)) for r in enc2.transform(df).collect())
     assert a == b
-    assert enc2.cards_ == enc.cards_      # broadcast gate state survives
+    # broadcast gate state survives
+    assert [lk.n for lk in enc2.lookups_] == [lk.n for lk in enc.lookups_]
 
 
 def test_outlier_clipper_roundtrip(spark, tmp_path):

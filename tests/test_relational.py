@@ -606,23 +606,49 @@ def test_incremental_rollup_matches_full_recompute(spark):
 def test_maybe_shuffle_hash_gate(spark):
     """The size-gated SHUFFLE_HASH hint (r9): under the gate the plan
     gets a ShuffledHashJoin; past it the hint is withheld and the
-    strategy is whatever the planner picks for an unhinted join."""
+    strategy is whatever the planner picks for an unhinted join.  The
+    80 KB side sits under the default broadcast threshold (the gate's
+    floor, pinned below), so the hinted half runs with planner
+    broadcasts off."""
     from dataframe_pipeline_spark.relational import maybe_shuffle_hash
 
     left = spark.range(0, 10000).withColumnRenamed("id", "k")
     right = spark.range(0, 10000).withColumnRenamed("id", "k")
-    hinted = maybe_shuffle_hash(left).join(right, "k")
-    # Pre-execution the AQE root hides the join node, so check the
-    # hint in the analyzed logical plan (ADVICE r9: the old
-    # "SHJ or AdaptiveSparkPlan" disjunct was vacuously true under
-    # AQE); the post-count ShuffledHashJoin assert below is the
-    # physical-strategy check.
-    assert "SHUFFLE_HASH" in hinted._jdf.queryExecution() \
-        .analyzed().toString().upper()
-    hinted.count()
-    plan = hinted._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        hinted = maybe_shuffle_hash(left).join(right, "k")
+        # Pre-execution the AQE root hides the join node, so check the
+        # hint in the analyzed logical plan (ADVICE r9: the old
+        # "SHJ or AdaptiveSparkPlan" disjunct was vacuously true under
+        # AQE); the post-count ShuffledHashJoin assert below is the
+        # physical-strategy check.
+        assert "SHUFFLE_HASH" in hinted._jdf.queryExecution() \
+            .analyzed().toString().upper()
+        hinted.count()
+        plan = hinted._jdf.queryExecution().executedPlan().toString()
+        assert "ShuffledHashJoin" in plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     # past the gate: no hint survives — the join must NOT be forced SHJ
     gated = maybe_shuffle_hash(left, max_bytes=1).join(right, "k")
     assert "SHUFFLE_HASH" not in gated._jdf.queryExecution() \
         .logical().toString().upper()
+    # under the floor (the session's broadcast threshold) no hint
+    # either: the planner broadcasts that side
+    floored = maybe_shuffle_hash(left).join(right, "k")
+    assert "SHUFFLE_HASH" not in floored._jdf.queryExecution() \
+        .logical().toString().upper()
+
+
+def test_q12_broadcasts_under_shuffle_hash_floor(spark):
+    """tpch_q12's orders side at sf0.01 is under the broadcast
+    threshold, so the shuffle-hash gate leaves it unhinted and the
+    executed plan joins by broadcast, with no shuffled hash join."""
+    import __spark_entry__ as e
+
+    df = e.queries()["tpch_q12_priority_class"](spark, "/root/testdata/sf0.01")
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert "ShuffledHashJoin" not in plan

@@ -19,9 +19,17 @@ def _fitted_pipe(spark):
     ev = _events(spark, "/root/testdata/sf0.001")
     pipe = dfp.DataframePipeline(steps=[
         dfp.ComplementLabelEncoder(inputs=["event_type"], outputs=["type_id"]),
-        dfp.Aggregator(inputs=["value"], outputs=["user_mean"],
-                       groupby=["user_id"], func="mean"),
+        # two inputs: one fitted lookup per column
+        dfp.ComplementLabelEncoder(inputs=["event_type", "user_id"],
+                                   outputs=["type_id2", "user_code"]),
+        # two outputs on one key: one lookup with two value columns
+        dfp.Aggregator(inputs=["value", "event_id"],
+                       outputs=["user_mean", "user_event_mean"],
+                       groupby=["user_id", "user_id"], func="mean"),
         dfp.FrequencyEncoder(inputs=["event_type"], outputs=["type_freq"]),
+        # double-valued lookup
+        dfp.FrequencyEncoder(inputs=["event_type"], outputs=["type_share"],
+                             normalize=True),
         dfp.Scaler(inputs=["value"], outputs=["value_mm"], strategy="minmax"),
     ])
     pipe.fit(ev)
@@ -70,6 +78,13 @@ def test_serving_unseen_group_null(spark):
 
 
 def test_serving_oversized_lookup_falls_back_to_join(spark):
+    """Known count (label encoder): the gate reads the fitted count, no
+    collect.  Unknown count (FrequencyEncoder fit launches no job): the
+    gate is the size of a limited collect."""
+    import contextlib
+    import unittest.mock as mock
+
+    from dataframe_pipeline_spark import base
     from dataframe_pipeline_spark.ext_queries import _events
 
     ev = _events(spark, "/root/testdata/sf0.001")
@@ -77,13 +92,24 @@ def test_serving_oversized_lookup_falls_back_to_join(spark):
                                      outputs=["type_id"])
     enc.fit(ev)
     # force the gate: pretend the dictionary exceeds the inline cap
-    lookup, default_id, _n = enc._lookups["event_type"]
-    enc._lookups["event_type"] = (lookup, default_id, SERVING_MAX_ROWS + 1)
-    pipe = dfp.DataframePipeline(steps=[enc])
-    out = pipe.serving_transform(local_rows_df(spark, [ev.head()], ev.schema))
-    phys = out._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in phys  # fell back to the batch join plan
-    assert out.collect()[0]["type_id"] is not None
+    lookup, _default_id = enc._lookups["event_type"]
+    lookup.n = SERVING_MAX_ROWS + 1
+    freq = dfp.FrequencyEncoder(inputs=["event_type"],
+                                outputs=["type_id"]).fit(ev)
+    assert freq._lookups["event_type"].n is None
+    cases = [
+        (enc, contextlib.nullcontext()),
+        # 5 fitted event types against a cap of 3
+        (freq, mock.patch.object(base, "SERVING_MAX_ROWS", 3)),
+    ]
+    for op, gate in cases:
+        pipe = dfp.DataframePipeline(steps=[op])
+        with gate:
+            out = pipe.serving_transform(
+                local_rows_df(spark, [ev.head()], ev.schema))
+        phys = out._jdf.queryExecution().executedPlan().toString()
+        assert "Join" in phys  # fell back to the batch join plan
+        assert out.collect()[0]["type_id"] is not None
 
 
 def test_local_rows_df_type_fidelity(spark):
@@ -321,3 +347,49 @@ def test_serving_ann_annotator_after_reload(spark, tmp_path):
            for r in p2.serving_transform(
                local_rows_df(spark, rows, emb.schema)).collect()}
     assert got == want
+
+
+def test_every_lookup_operator_serves_job_free(spark):
+    """Every operator in ``operators`` that builds a FittedLookup has
+    its own ``serving_transform``, and after fit that hook folds a
+    one-row local input to LocalTableScan — a new encoder cannot
+    silently fall back to the join plan."""
+    import inspect
+
+    from pyspark.sql import functions as F
+
+    from dataframe_pipeline_spark import operators
+    from dataframe_pipeline_spark.ext_queries import _events
+
+    class LabelEncoder:  # sklearn stand-in, recognized by class name
+        pass
+
+    factories = {
+        "ComplementLabelEncoder": lambda: dfp.ComplementLabelEncoder(
+            inputs=["event_type"], outputs=["o"]),
+        "FrequencyEncoder": lambda: dfp.FrequencyEncoder(
+            inputs=["event_type"], outputs=["o"]),
+        "TargetEncoder": lambda: dfp.TargetEncoder(
+            inputs=["event_type"], outputs=["o"], target="value"),
+        "WOEEncoder": lambda: dfp.WOEEncoder(
+            inputs=["event_type"], outputs=["o"], target="y"),
+        "Aggregator": lambda: dfp.Aggregator(
+            inputs=["value"], outputs=["o"], groupby=["user_id"],
+            func="mean"),
+        "WrapTransformer": lambda: dfp.WrapTransformer(
+            inputs=["event_type"], outputs=["o"],
+            transformer=LabelEncoder()),
+    }
+    holders = {name for name in operators.__all__
+               if "FittedLookup(" in inspect.getsource(
+                   getattr(operators, name))}
+    assert holders == set(factories)
+    ev = _events(spark, "/root/testdata/sf0.001").withColumn(
+        "y", (F.col("value") > 0).cast("int"))
+    one = local_rows_df(spark, [ev.head()], ev.schema)
+    for name, make in factories.items():
+        op = make().fit(ev)
+        assert "serving_transform" in vars(type(op)), name
+        phys = op.serving_transform(one)._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert phys.strip().startswith("LocalTableScan"), (name, phys)

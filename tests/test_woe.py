@@ -65,3 +65,18 @@ def test_woe_broadcast_lookup_plan(spark, labeled):
     plan = (enc.transform(labeled)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BroadcastHashJoin" in plan      # size-gated lookup join
+
+
+def test_woe_fit_jobs_one_column(spark, labeled):
+    """A one-column fit runs the grouped stats checkpoint and ONE stats
+    collect, which also returns the broadcast-gate cardinality (no
+    separate count() job over the lookup)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("woe-fit-jobs", "one-column WOE fit")
+    try:
+        enc = WOEEncoder(inputs=["cat"], outputs=["w"], target="y").fit(labeled)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("woe-fit-jobs")) == 4
+    assert enc.lookups_[0].n == 3
+    assert enc.totals_ == (4.0, 6.0)
